@@ -80,20 +80,24 @@ import logging
 _LOG = logging.getLogger(__name__)
 
 
-def _obs_get(obs: Observation, defaults: dict) -> dict:
-    """Observation.get, tolerating elided metrics: when AQE collapses an
-    empty join branch it can prune the CollectMetrics node entirely, and
-    the JVM then fails to convert the (schemaless) result row. Empty input
-    means every counter is 0, which is exactly ``defaults`` — but any
-    OTHER failure is logged so a genuine Observation bug can't silently
-    zero a whole wave's metrics (round-2 verdict)."""
+def _obs_get(obs: Observation, defaults: dict, name: str, wave: int) -> dict:
+    """Observation.get, or ``defaults`` (zeros) when the metrics are gone.
+
+    AQE drops a CollectMetrics node whenever it replaces the query stage
+    holding it with an empty relation — which it does when the stage
+    OUTPUTS nothing, even if the node itself counted rows — and the JVM
+    then fails to convert the schemaless result row. Zeros are right only
+    if the observed input really was empty, so every fallback is logged
+    with the observation's name and the wave (round-2 verdict: a genuine
+    Observation bug must not silently zero a wave's metrics)."""
     try:
         got = obs.get
         return {**defaults, **got} if got else dict(defaults)
     except Exception as e:
         _LOG.warning(
-            "observation read failed (%s: %s); wave counters default to 0",
-            type(e).__name__, e,
+            "wave %d: observation %r read failed (%s: %s); its counters %s "
+            "default to 0",
+            wave, name, type(e).__name__, e, sorted(defaults),
         )
         return dict(defaults)
 
@@ -116,7 +120,6 @@ class CrawlEngine:
         hunt_open_directories: bool = config.HUNT_OPEN_DIRECTORIES,
         robots_rules: DataFrame | None = None,
         bucket_lineage: bool = True,
-        rebalance_fetch: bool = False,
         use_bloom: bool = False,
         bloom_items_per_bucket: int = config.BLOOM_ITEMS_PER_BUCKET,
         compact_every: int = 16,
@@ -144,13 +147,6 @@ class CrawlEngine:
         # per-salt-bucket lineage rows cost one extra tiny job per wave;
         # throughput benches may turn them off (scalar metrics remain)
         self.bucket_lineage = bucket_lineage
-        # rebalance_fetch: round-robin the fetch-join output before the
-        # python extraction stage. OFF by default — extraction runs inside
-        # the scan stage, so parallelism comes from scan splits
-        # (maxPartitionBytes, session.py) and the shuffle would move the
-        # whole wave's page bytes for nothing. Turn on only for layouts
-        # whose files can't split (few huge row groups).
-        self.rebalance_fetch = rebalance_fetch
         # Bloom seen-set pre-filter (north_rule). Off by default in the
         # sandbox: the exact anti-join is cheaper below ~10^7 frontier rows
         # (BENCH notes); at cluster scale this flag is the difference
@@ -265,13 +261,32 @@ class CrawlEngine:
         )
 
     @staticmethod
-    def _dedupe_links(flagged: DataFrame) -> DataFrame:
-        """J4 set semantics: keep clean rows, smallest depth per URL."""
-        return (
-            flagged.filter(F.col("drop_reason").isNull())
-            .groupBy("url", "host")
-            .agg(F.min("depth").alias("depth"))
+    def _dedupe_links(flagged: DataFrame, obs: Observation | None = None) -> DataFrame:
+        """J4 set semantics: keep clean rows, smallest depth per URL.
+
+        Each URL group also counts its classified rows and each drop
+        reason, and ``obs``, when given, sums them (``links_seen``,
+        ``drop_<reason>``) ABOVE the aggregate. An observation on the
+        classified rows themselves shares a stage with the clean-row
+        filter and the anti-join, which the optimizer pushes below the
+        aggregate; when every link is a drop or already seen that stage
+        outputs nothing, AQE replaces it with an empty relation, and its
+        metrics vanish even though it read rows. Above the aggregate the
+        node is only ever empty when no link was classified at all."""
+        clean = F.col("drop_reason").isNull()
+        counts = {"links_seen": F.lit(1)} | {
+            f"drop_{r}": F.when(F.col("drop_reason") == r, 1) for r in DROP_REASONS
+        }
+        per_url = flagged.groupBy("url", "host").agg(
+            F.min(F.when(clean, F.col("depth"))).alias("depth"),
+            F.count(F.when(clean, 1)).alias("_clean"),
+            *[F.count(c).alias(f"_{k}") for k, c in counts.items()],
         )
+        if obs is not None:
+            per_url = per_url.observe(
+                obs, *[F.coalesce(F.sum(f"_{k}"), F.lit(0)).alias(k) for k in counts]
+            )
+        return per_url.filter(F.col("_clean") > 0).select("url", "host", "depth")
 
     # ------------------------------------------------------------- bootstrap
     def _seed_rows(self, urls: DataFrame | list[str], wave: int) -> DataFrame:
@@ -420,7 +435,7 @@ class CrawlEngine:
         return n
 
     # ------------------------------------------------------------- one wave
-    def _fused_fetch_extract(self, wave_df: DataFrame, npart: int) -> DataFrame:
+    def _fused_fetch_extract(self, wave_df: DataFrame, npart: int | None = None) -> DataFrame:
         """The wave hot path, unexecuted: broadcast the (small) wave against
         the pages table and run sniff → route → extraction inside the scan
         stage itself — one pages scan, zero shuffles, one Arrow crossing
@@ -428,18 +443,11 @@ class CrawlEngine:
         consumes them. A named method (round-4 verdict #5) so plan audits —
         the bench plan-guard and tests — can assert the physical shape
         (BroadcastHashJoin, no Exchange, ArrowEvalPython only) without
-        running a wave; run_wave caches the returned frame."""
-        hits = self._pages_for_wave(wave_df).join(
-            F.broadcast(wave_df), on="url", how="inner"
-        )
-        if self.rebalance_fetch:
-            # pathological layouts only (few huge files that defeat split
-            # planning): round-robin the joined rows before extraction.
-            # Costs a full shuffle of the wave's page bytes — prefer a
-            # smaller maxPartitionBytes when the table layout allows.
-            hits = hits.repartition(npart)
+        running a wave; run_wave caches the returned frame. The plan does
+        not depend on ``npart``, which plan-audit callers may still pass."""
         fetched = (
-            hits
+            self._pages_for_wave(wave_df)
+            .join(F.broadcast(wave_df), on="url", how="inner")
             .withColumn("file_extension", sqlfns.file_extension(sqlfns.path_of(F.col("url"))))
             .withColumn("content_type", sniff.sniff_content_type(F.col("html"), F.col("file_extension")))
             .withColumn("route", routing.route_col(routing.sanitize_content_type_col(F.col("content_type"))))
@@ -572,7 +580,7 @@ class CrawlEngine:
         # Parallelism here comes from SCAN SPLITS — maxPartitionBytes is
         # sized (session.py) so a wave's pages span hundreds of fine tasks
         # (~1-2 s of python each), which pack evenly at any core count.
-        fetched = self._fused_fetch_extract(wave_df, npart).cache()
+        fetched = self._fused_fetch_extract(wave_df).cache()
         mark("t_fetch")
         # ACTION 1: populate the cache once — every downstream consumer
         # (missing anti-join, crawled write, email branch, link pipeline)
@@ -626,7 +634,8 @@ class CrawlEngine:
         n_write = npart * max(1, -(-urls_selected // (config.WRITE_TASK_ROWS * npart)))
         crawled_version = self.lake.crawled.append(
             spark, crawled_all.coalesce(n_write), meta={"wave": wave})
-        crawl_stats = _obs_get(obs_crawl, {"rows": 0, "fetched_ok": 0, "emails": 0})
+        crawl_stats = _obs_get(obs_crawl, {"rows": 0, "fetched_ok": 0, "emails": 0},
+                               "crawled", wave)
         mark("t_crawled")
 
         # ---- discovered links → hygiene → anti-join → frontier commit
@@ -651,22 +660,15 @@ class CrawlEngine:
                 .unionByName(tree_of(guarded, F.col("depth")))
             )
 
-        flagged = self._classify_links(web_links)
+        # links_seen + drop counters ride the dedupe aggregate (see
+        # _dedupe_links); J1/J5 seen-set membership follows. With use_bloom
+        # the frontier is only SCANNED (bloom negatives bypass it;
+        # positives broadcast-confirm); without, the exact anti-join (right
+        # side = frontier) is cheaper at sub-10^7 frontier sizes.
         obs_links = Observation()
-        flagged = flagged.observe(
-            obs_links,
-            F.count(F.lit(1)).alias("links_seen"),
-            *[
-                F.count(F.when(F.col("drop_reason") == r, 1)).alias(f"drop_{r}")
-                for r in DROP_REASONS
-            ],
-        )
-        # J1/J5 seen-set membership. With use_bloom the frontier is only
-        # SCANNED (bloom negatives bypass it; positives broadcast-confirm);
-        # without, the exact anti-join (right side = frontier) is cheaper
-        # at sub-10^7 frontier sizes.
         hashed = with_host_salt(
-            self._dedupe_links(flagged), buckets=config.HOST_SALT_BUCKETS
+            self._dedupe_links(self._classify_links(web_links), obs_links),
+            buckets=config.HOST_SALT_BUCKETS,
         ).withColumn("url_hash", sqlfns.url_hash(F.col("url")))
         # read_keys, not the MoR view: flips never add url_hashes, so the
         # seen-set is base ∪ insert-deltas — skipping the flip join removes
@@ -723,6 +725,7 @@ class CrawlEngine:
         link_stats = _obs_get(
             obs_links,
             {"links_seen": 0, **{f"drop_{r}": 0 for r in DROP_REASONS}},
+            "links", wave,
         )
         mark("t_frontier")
 
@@ -735,7 +738,7 @@ class CrawlEngine:
             links_new = sum(v for _, _, _, v in bucket_rows)
         else:
             bucket_rows = []
-            links_new = int(_obs_get(obs_insert, {"links_new": 0})["links_new"])
+            links_new = int(_obs_get(obs_insert, {"links_new": 0}, "inserts", wave)["links_new"])
         drop_rows = [
             (wave, f"drop:{r}", "links_dropped", int(link_stats[f"drop_{r}"]))
             for r in DROP_REASONS
@@ -873,7 +876,7 @@ class CrawlEngine:
             F.count(F.when(F.col("ext_consistent"), 1)).alias("consistent"),
         )
         self.lake.crawled.append(spark, crawled_all, meta={"wave": wave, "op": "fast_pass"})
-        stats = _obs_get(obs, {"fetched_ok": 0, "consistent": 0})
+        stats = _obs_get(obs, {"fetched_ok": 0, "consistent": 0}, "fast_pass", wave)
 
         # discovered links from fallback-extracted pages → same hygiene +
         # seen-set pipeline as a normal wave, committed with the flips

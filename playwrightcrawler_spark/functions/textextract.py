@@ -7,14 +7,12 @@ is not in a small blocklist, stripped, empties dropped, joined with a single
 space (``get_min_webcontent``, reference playwrightcrawler.py:3733-3768),
 truncated to ``MAX_WEBCONTENT_SIZE`` chars (:3439).
 
-bs4 is not installed in this sandbox, so the default engine is a
-stdlib-``html.parser`` walk that implements the same spec: a tag-stack
-parser in which each text node's parent is the innermost open element.
-When bs4 IS importable (production cluster), ``extract_text`` automatically
-uses it so the output is produced by the very same library as the
-reference. The pytest suite pins the two paths to each other on fixtures
-whenever bs4 is present, and always pins the Spark UDF output to this
-driver-side kernel.
+The engine has ONE parser on every host, whatever is installed: a fast
+scanner for a strict well-formed subset that bails to a stdlib
+``html.parser`` walk, both implementing the same spec — a tag-stack parser
+in which each text node's parent is the innermost open element. The pytest
+suite pins the hand-computed goldens to real bs4 wherever bs4 is installed,
+and always pins the Spark UDF output to this driver-side kernel.
 """
 
 from __future__ import annotations
@@ -26,14 +24,7 @@ from urllib.parse import urlsplit
 
 from playwrightcrawler_spark import config
 
-try:  # pragma: no cover - exercised only where bs4 is installed
-    from bs4 import BeautifulSoup  # type: ignore
-
-    _HAVE_BS4 = True
-except ImportError:
-    _HAVE_BS4 = False
-
-# charset detectors, import-guarded like bs4: chardet is what the reference
+# charset detectors, import-guarded: chardet is what the reference
 # uses (playwrightcrawler.py:5092); charset_normalizer is its maintained
 # drop-in and IS present in this sandbox. Either enables the detection
 # rung; with neither, the ladder ends at UTF-8-with-replacement.
@@ -428,8 +419,7 @@ def fast_scan_bailed(raw) -> bool:
     i.e. extraction pays the scan attempt AND the full HTMLParser walk
     (round-5 verdict #4: the 6.4 ms/page win assumes most real markup stays
     inside the subset; the bail fraction is measured into the bench JSON as
-    ``fast_scan_bail_pct`` and pinned on the fixture corpus in pytest).
-    Meaningful only on the non-bs4 path (bs4 replaces the scanner)."""
+    ``fast_scan_bail_pct`` and pinned on the fixture corpus in pytest)."""
     content = decode_html(raw)
     if not content:
         return False
@@ -453,41 +443,21 @@ def parse_html(html: str) -> tuple[list[str], list[str]]:
     Every extraction path (``extract_text``, ``extract_links``,
     ``words_from_html`` and the fused crawl-hot-path UDF ``extract_all``)
     goes through here, so the engine can never use different parsers on
-    different paths. When bs4 is importable (production clusters — the
-    reference's requirements.txt ships it) the parse is BeautifulSoup
-    ``html.parser`` — the very library the reference uses
-    (get_min_webcontent, playwrightcrawler.py:3733-3768); otherwise the
-    fast scanner handles the well-formed subset and the stdlib walker the
-    rest, both implementing the identical spec (pinned to the bs4 path by
-    golden fixtures in tests/test_textextract.py, and to each other by the
-    test_fast_scan_* equivalence suite).
+    different paths — nor on different hosts: the fast scanner handles the
+    well-formed subset and the stdlib walker the rest, both implementing
+    the spec of the reference's BeautifulSoup ``html.parser`` pass
+    (get_min_webcontent, playwrightcrawler.py:3733-3768), pinned to bs4 by
+    the golden fixtures in tests/test_textextract.py and to each other by
+    the test_fast_scan_* equivalence suite.
 
     text_parts are UNSTRIPPED node payloads (callers strip/join per their
     reference op); links are first-seen-order href/src of a/link/script/img.
     """
     if not html:
         return [], []
-    if not _HAVE_BS4:
-        fast = _fast_parse(html)
-        if fast is not None:
-            return fast
-        w = _walk(html)
-        return w.text_parts, w.links
-    if _HAVE_BS4:
-        soup = BeautifulSoup(html, "html.parser")
-        parts = [
-            str(t)
-            for t in soup.find_all(string=True)
-            if t.parent.name not in TAG_BLOCKLIST
-        ]
-        links: list[str] = []
-        seen: set[str] = set()
-        for el in soup.find_all(list(_LINK_ATTR)):
-            v = el.get(_LINK_ATTR[el.name])
-            if isinstance(v, str) and v not in seen:
-                seen.add(v)
-                links.append(v)
-        return parts, links
+    fast = _fast_parse(html)
+    if fast is not None:
+        return fast
     w = _walk(html)
     return w.text_parts, w.links
 

@@ -1,13 +1,16 @@
 """SparkSession factory tuned for this engine.
 
-Local-mode defaults target the sandbox (local[32], single JVM); on a real
-cluster the same settings apply minus master/driver-memory, and the tables
-move from bare parquet to an Iceberg catalog (see sources/tables.py for the
-mapping). All knobs are chosen for the 100 TB design point:
+Run as a plain Python script, the session is local[N] with N =
+``$SPARK_GRAFT_CPUS`` or the CPUs this process may run on. Under
+``spark-submit`` (or the pyspark shell) the launcher's ``--master`` wins and
+the driver memory is the launcher's; the other settings apply unchanged, and
+on a cluster the tables move from bare parquet to an Iceberg catalog (see
+sources/tables.py for the mapping). The settings are constants chosen for
+the 100 TB design point:
 
 - AQE on (runtime skew-join splitting + partition coalescing);
-- shuffle partitions sized to cores locally, to ~2-3× total cores on a
-  cluster;
+- shuffle partitions default to max(cores, 8) locally; pass ~2-3× total
+  cores on a cluster;
 - Arrow batches capped so a pathological 900k-char text column can't blow
   executor memory inside a pandas UDF (reference analogue: the 6 GB
   per-process abort, config.py:224-233).
@@ -19,21 +22,19 @@ import os
 
 from pyspark.sql import SparkSession
 
-from playwrightcrawler_spark import config
-
 
 def get_spark(
     app_name: str = "playwrightcrawler_spark",
     cores: int | None = None,
     shuffle_partitions: int | None = None,
-    extra_conf: dict | None = None,
 ) -> SparkSession:
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    shuffle_partitions = shuffle_partitions or config.DEFAULT_SHUFFLE_PARTITIONS
+    cores = cores or int(
+        os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    )
+    shuffle_partitions = shuffle_partitions or max(cores, 8)
 
     builder = (
-        SparkSession.builder.master(f"local[{cores}]")
-        .appName(app_name)
+        SparkSession.builder.appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.default.parallelism", str(cores))
         .config("spark.sql.adaptive.enabled", "true")
@@ -64,8 +65,7 @@ def get_spark(
         # extraction stage at local[32] vs 8 s at local[8]). 256 rows
         # (~50 MB/task at CC page weight) keeps GC flat at any core
         # count while still amortizing per-batch pandas overhead.
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch",
-                os.environ.get("SPARK_GRAFT_ARROW_BATCH", "256"))
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "256")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # PINNED, not assumed (round-4 verdict #6): daemon workers must be
         # reused across tasks or every wave re-pays fork + numpy/pandas
@@ -87,24 +87,18 @@ def get_spark(
         # extract phase 25%). Splits finer than a row group yield empty
         # slices, so the open cost below keeps packing at >= 1 file/task
         # rather than slicing inside row groups.
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", str(4 * 1024 * 1024)),
-        )
+        .config("spark.sql.files.maxPartitionBytes", str(4 * 1024 * 1024))
         # weigh small files realistically during split packing: the 4 MB
         # default open cost makes Spark bin-pack 2-3 small row-group files
         # per task (that IS the 80-task cap above); 512 KB keeps seek
         # amortization without collapsing parallelism on fine-file layouts
-        .config(
-            "spark.sql.files.openCostInBytes",
-            os.environ.get("SPARK_GRAFT_OPEN_COST_BYTES", str(512 * 1024)),
-        )
+        .config("spark.sql.files.openCostInBytes", str(512 * 1024))
     )
-    # ad-hoc A/B knobs without code edits: "k=v;k=v"
-    for kv in os.environ.get("SPARK_GRAFT_EXTRA_CONF", "").split(";"):
-        if "=" in kv:
-            k, v = kv.split("=", 1)
-            builder = builder.config(k.strip(), v.strip())
+    # spark-submit and the pyspark shell hand this process a running driver
+    # JVM (PYSPARK_GATEWAY_PORT) that already carries their --master;
+    # setting one here would silently override it
+    if "PYSPARK_GATEWAY_PORT" not in os.environ:
+        builder = builder.master(f"local[{cores}]")
     evlog = os.environ.get("SPARK_GRAFT_EVENTLOG")
     if evlog:
         os.makedirs(evlog, exist_ok=True)
@@ -115,8 +109,6 @@ def get_spark(
             .config("spark.eventLog.compress", "false")
             .config("spark.eventLog.rolling.enabled", "false")
         )
-    for k, v in (extra_conf or {}).items():
-        builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

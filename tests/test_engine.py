@@ -124,6 +124,44 @@ def test_wave_metrics_lineage(crawl_result, spark):
     assert m.filter(F.col("scope").startswith("drop:")).count() > 0
 
 
+@pytest.mark.parametrize("bucket_lineage", [True, False])
+def test_link_counters_equal_direct_count(spark, pages_dir, tmp_path, caplog, bucket_lineage):
+    """links_seen and the drop:* rows of every wave equal a direct count of
+    the links that wave classified — also in waves whose links are all
+    already in the frontier. There the observation on the classified rows
+    shared a stage that outputs nothing, AQE replaced that stage with an
+    empty relation, and the wave committed zeros for every link counter."""
+    from playwrightcrawler_spark.crawl.engine import DROP_REASONS
+
+    eng = CrawlEngine(spark, pages_dir, str(tmp_path / "wh"), wave_size=200,
+                      bucket_lineage=bucket_lineage)
+    eng.bootstrap(pages_gen.seed_urls())
+    direct = []
+    classify = eng._classify_links
+
+    def counting_classify(links):
+        out = classify(links)
+        direct.append({r["drop_reason"]: r["count"]
+                       for r in out.groupBy("drop_reason").count().collect()})
+        return out
+
+    eng._classify_links = counting_classify
+    waves = [m for m in eng.run(4) if not m["done"]]
+    assert len(waves) == len(direct) == 4
+    # the case that lost its counters: links classified, none new
+    assert any(m["links_seen"] > 0 and m["links_new"] == 0 for m in waves)
+    assert not [r for r in caplog.records if "observation" in r.getMessage()]
+    got = {
+        (r["wave"], r["scope"]): r["value"]
+        for r in eng.lake.wave_metrics.read(spark)
+        .filter(F.col("metric").isin("links_seen", "links_dropped")).collect()
+    }
+    for m, want in zip(waves, direct):
+        assert m["links_seen"] == got[(m["wave"], "wave")] == sum(want.values())
+        for r in DROP_REASONS:
+            assert got.get((m["wave"], f"drop:{r}"), 0) == want.get(r, 0), (m["wave"], r)
+
+
 def test_resume_identical(spark, pages_dir, tmp_path_factory):
     """Kill-between-waves semantics: 1+2 waves across two engine instances
     == 3 waves in one (north_rule resumability)."""

@@ -5,7 +5,8 @@ _build_crawled's two cache scans with one route-conditional projection
 (fused=True). These tests pin (a) fused == union semantics row-for-row,
 (b) the fixture writer's n_files layout (scan-split granularity IS
 extraction parallelism — a few single-row-group files silently cap the
-whole crawl), and (c) the engine's no-shuffle default.
+whole crawl). The wave's zero-shuffle plan is pinned by
+tests/test_plan_guard.py.
 """
 
 from __future__ import annotations
@@ -113,8 +114,3 @@ def test_pages_gen_n_files_layout(spark, tmp_path):
     assert len(parts) == 8
     assert spark.read.parquet(out).count() == n == 60
 
-
-def test_engine_defaults_no_fetch_shuffle(idle_engine):
-    """rebalance_fetch defaults OFF: extraction parallelism comes from
-    scan splits, not a wave-bytes shuffle."""
-    assert idle_engine.rebalance_fetch is False

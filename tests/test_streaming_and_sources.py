@@ -391,3 +391,35 @@ def test_pyfiles_zip_self_contained(tmp_path):
         capture_output=True, text=True, cwd=str(tmp_path),
     )
     assert r.stdout.strip() == "ok", r.stderr[-800:]
+
+
+def test_spark_submit_master_wins(tmp_path):
+    """Under spark-submit the launcher's --master is the session's master:
+    get_spark(cores=3) must not turn `--master local[2]` (or yarn, k8s)
+    into local[3]. Runs the deploy path: the --py-files zip, no repo dir
+    on the path."""
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    import pyspark
+
+    repo = Path(__file__).resolve().parent.parent
+    zip_path = subprocess.run(
+        [sys.executable, "scripts/make_pyfiles.py", str(tmp_path / "pkg.zip")],
+        capture_output=True, text=True, cwd=repo, check=True,
+    ).stdout.strip()
+    job = tmp_path / "job.py"
+    job.write_text(
+        "from playwrightcrawler_spark.session import get_spark\n"
+        "s = get_spark(cores=3)\n"
+        "print('master=' + s.sparkContext.master)\n"
+        "s.stop()\n"
+    )
+    r = subprocess.run(
+        [os.path.join(pyspark.__path__[0], "bin", "spark-submit"),
+         "--master", "local[2]", "--py-files", zip_path, str(job)],
+        capture_output=True, text=True, cwd=str(tmp_path), timeout=300,
+    )
+    assert "master=local[2]" in r.stdout.splitlines(), (r.stdout, r.stderr[-800:])

@@ -181,9 +181,8 @@ def test_goldens_match_real_bs4_when_installed():
     blocklist, strip/drop/join) and pins the hand-computed strings to it,
     turning the byte-identical-vs-bs4 claim from code-inspected into
     machine-checked."""
-    if not textextract._HAVE_BS4:
-        pytest.skip("bs4 not installed in this sandbox")
-    from bs4 import BeautifulSoup
+    BeautifulSoup = pytest.importorskip(
+        "bs4", reason="bs4 not installed").BeautifulSoup
 
     for html, expected in GOLDEN_TEXT:
         soup = BeautifulSoup(
